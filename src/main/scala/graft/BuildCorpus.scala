@@ -44,26 +44,7 @@ import graft.operators.{Dedup, Multimodal, Sampling, Similarity, TextOps}
 object BuildCorpus {
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(Runtime.getRuntime.availableProcessors)
-    // stage profiling for scale runs (the Dbg listener, env-gated):
-    // SPARK_GRAFT_STAGE_MIN=<secs> prints every stage over the floor
-    sys.env.get("SPARK_GRAFT_STAGE_MIN").map(_.toDouble).foreach { minStage =>
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          // either Option can be None (stage failed before submission
-          // / resubmitted) — a get would throw inside the listener
-          // and silently drop the profile row (the Dbg.scala guard)
-          for (sub <- si.submissionTime; end <- si.completionTime) {
-            val dur = (end - sub) / 1000.0
-            if (dur > minStage)
-              println(f"[stage] id=${si.stageId} tasks=${si.numTasks} time=$dur%.2fs " +
-                si.name.takeWhile(_ != '\n').take(80))
-          }
-        }
-      })
-    }
+    val spark = GraftSession.fromEnv()
     // usage: <in> <out>            — full build
     //        <in> <out> <prev> <n> — increment n against the build at <prev>
     val log =
@@ -227,6 +208,19 @@ object BuildCorpus {
     (nDocs, nStaged)
   }
 
+  /** Start `body` on a daemon thread whose Spark jobs carry their own
+    * job tag. The returned stop cancels those jobs until the thread
+    * exits (a job it launches after one cancel is caught by the next);
+    * it is a no-op once the thread has ended. */
+  private[graft] def sideThread(s: SparkSession, name: String)(body: => Unit)
+      : (Thread, () => Unit) = {
+    val tag = s"$name-${java.util.UUID.randomUUID}"
+    val t = new Thread(() => { s.sparkContext.addJobTag(tag); body }, name)
+    t.setDaemon(true)
+    t.start()
+    (t, () => while (t.isAlive) { s.sparkContext.cancelJobsWithTag(tag); t.join(100) })
+  }
+
   /** Build the corpus artifact at `out` from the raw tables at `in`;
     * returns the decision log (also persisted at out/decisions.parquet). */
   def run(s: SparkSession, in: String, out: String): DataFrame = {
@@ -257,7 +251,7 @@ object BuildCorpus {
     // after the join.
     val idxErr = new java.util.concurrent.atomic.AtomicReference[Throwable]
     val idxWall = new java.util.concurrent.atomic.AtomicLong
-    val idxThread = new Thread(() => {
+    val (idxThread, stopIdx) = sideThread(s, "graft-dupindex") {
       try {
         val t0 = System.nanoTime
         graft.sources.DupIndex.writeFrom(s,
@@ -265,9 +259,7 @@ object BuildCorpus {
           s"$out/dupindex")
         idxWall.set(System.nanoTime - t0)
       } catch { case t: Throwable => idxErr.set(t) }
-    }, "graft-dupindex")
-    idxThread.setDaemon(true)
-    idxThread.start()
+    }
 
     // 2+3-overlapped. The embedding-side audit, logged: the q154
     // router's verdict (banding vs cells, measured skew) and q168's
@@ -283,7 +275,7 @@ object BuildCorpus {
     val embErr = new java.util.concurrent.atomic.AtomicReference[Throwable]
     val embRes = new java.util.concurrent.atomic.AtomicReference[
       (org.apache.spark.sql.Row, Double, org.apache.spark.sql.Row, Double)]
-    val embThread = new Thread(() => {
+    val (embThread, stopEmb) = sideThread(s, "graft-embaudit") {
       try {
         val tr0 = System.nanoTime
         val routeRow = Dedup.q154(s, staged).agg(count(lit(1)).as("n"),
@@ -298,136 +290,139 @@ object BuildCorpus {
           sum(when(!col("contaminated"), 1L).otherwise(0L)).as("ok")).collect()(0)
         embRes.set((routeRow, tRoute, sd, (System.nanoTime - ts0) / 1e9))
       } catch { case t: Throwable => embErr.set(t) }
-    }, "graft-embaudit")
-    embThread.setDaemon(true)
-    embThread.start()
+    }
 
-    // 3. the gate: exact-dup canonical ∧ near-dup canonical ∧ clean ∧
-    // quality, with the content-keyed split — both ledger counts in
-    // ONE agg over the checkpointed frame (r9); own wall captured
-    // here, appended in id order after the embedding thread joins
-    val tg0 = System.nanoTime
-    val gate = Sampling.q68(s, staged).localCheckpoint(false)
-    val gateTrain = gate.filter(col("split") === "train").select("doc_id")
-    val gateAgg = gate.agg(count(lit(1)).as("all"),
-      coalesce(sum(when(col("split") === "train", 1L).otherwise(0L)), lit(0L))
-        .as("tr")).collect()(0)
-    val nGateTrain = gateAgg.getLong(1)
-    val tGate = (System.nanoTime - tg0) / 1e9
+    // a main-thread stage that throws must not leave either side
+    // thread (or its jobs) running past run()
+    try {
 
-    // 4. decontamination: exact 8-gram (q69) ∪ fuzzy shingle-jaccard
-    // (q86) flags over the staged corpus; flagged train docs drop
-    val td0 = System.nanoTime
-    val drop = Sampling.q69(s, staged).filter(col("contaminated")).select("doc_id")
-      .unionByName(Sampling.q86(s, staged).filter(col("contaminated")).select("doc_id"))
-      .distinct().localCheckpoint(false)
-    val nDropped = gateTrain.join(drop, Seq("doc_id"), "left_semi").count()
-    val tDecon = (System.nanoTime - td0) / 1e9
+      // 3. the gate: exact-dup canonical ∧ near-dup canonical ∧ clean ∧
+      // quality, with the content-keyed split — both ledger counts in
+      // ONE agg over the checkpointed frame (r9); own wall captured
+      // here, appended in id order after the embedding thread joins
+      val tg0 = System.nanoTime
+      val gate = Sampling.q68(s, staged).localCheckpoint(false)
+      val gateTrain = gate.filter(col("split") === "train").select("doc_id")
+      val gateAgg = gate.agg(count(lit(1)).as("all"),
+        coalesce(sum(when(col("split") === "train", 1L).otherwise(0L)), lit(0L))
+          .as("tr")).collect()(0)
+      val nGateTrain = gateAgg.getLong(1)
+      val tGate = (System.nanoTime - tg0) / 1e9
 
-    embThread.join()
-    Option(embErr.get).foreach(t => throw t)
-    val (routeRow, tRoute, sd, tSd) = embRes.get
-    decisions.timed((2, "embedding_route", routeRow.getLong(0), routeRow.getLong(1),
-      s"route=${routeRow.getString(2)} med_skew_x1000=${routeRow.getLong(3)} (overlapped)"),
-      tRoute)
-    decisions.timed((3, "semantic_decon", sd.getLong(0), sd.getLong(1),
-      "q168 vs eval vectors (overlapped)"), tSd)
-    decisions.timed((4, "gate_keep", nStaged, nGateTrain,
-      s"q68 kept_all_splits=${gateAgg.getLong(0)}"), tGate)
-    decisions.timed((5, "decontaminate", nGateTrain, nGateTrain - nDropped,
-      s"q69|q86 flagged_in_gate=$nDropped"), tDecon)
+      // 4. decontamination: exact 8-gram (q69) ∪ fuzzy shingle-jaccard
+      // (q86) flags over the staged corpus; flagged train docs drop
+      val td0 = System.nanoTime
+      val drop = Sampling.q69(s, staged).filter(col("contaminated")).select("doc_id")
+        .unionByName(Sampling.q86(s, staged).filter(col("contaminated")).select("doc_id"))
+        .distinct().localCheckpoint(false)
+      val nDropped = gateTrain.join(drop, Seq("doc_id"), "left_semi").count()
+      val tDecon = (System.nanoTime - td0) / 1e9
 
-    // 4m. MEDIA stages (r12, only when the intake ships a
-    // media.parquet): docs carrying an IMAGE payload are caption×
-    // image training pairs, and two more gates apply before packing —
-    //  - the q156 cross-modal admission (caption quality ≥ CapQual ∧
-    //    real-header image with both dims ≥ MinDim) over the REAL
-    //    payload decode, not the ASCII stub class;
-    //  - the q171 image-family canonical keep: phash banding pairs →
-    //    connected families → only the min-id member ships (a crawl's
-    //    re-encoded logo family must not ship N times).
-    // Non-image media (wav/stub-audio) passes through un-gated — the
-    // audio family gate is q157's follow-up, not this stage. Scale
-    // shape: two embarrassingly-parallel decode passes (meta, phash)
-    // + q171's edge-sized machinery; verdicts are doc-id row sets.
-    val mediaDrop = mediaStages(s, in, staged, out, decisions)
+      embThread.join()
+      Option(embErr.get).foreach(t => throw t)
+      val (routeRow, tRoute, sd, tSd) = embRes.get
+      decisions.timed((2, "embedding_route", routeRow.getLong(0), routeRow.getLong(1),
+        s"route=${routeRow.getString(2)} med_skew_x1000=${routeRow.getLong(3)} (overlapped)"),
+        tRoute)
+      decisions.timed((3, "semantic_decon", sd.getLong(0), sd.getLong(1),
+        "q168 vs eval vectors (overlapped)"), tSd)
+      decisions.timed((4, "gate_keep", nStaged, nGateTrain,
+        s"q68 kept_all_splits=${gateAgg.getLong(0)}"), tGate)
+      decisions.timed((5, "decontaminate", nGateTrain, nGateTrain - nDropped,
+        s"q69|q86 flagged_in_gate=$nDropped"), tDecon)
 
-    // 5. mixture admission + packing over the survivors (q75's core
-    // over the ALREADY-CHECKPOINTED gate set minus the drop set — the
-    // composed gate legs must not execute a second time). No count
-    // action here: |packed| == |shipped| (inner join on staged's
-    // unique doc_ids), read off the stats agg below (r9)
-    // no barrier on keepFinal: every leg (gate, drop, media verdicts)
-    // is already checkpointed, so the two consumers (packing,
-    // mixstats) re-run only cheap anti joins (the q31 measured-loss
-    // lesson). The media-present ledger needs the exact keep count;
-    // media-absent keeps r9's no-count profile (|gate| - |dropped|).
-    val keepFinal = mediaDrop
-      .foldLeft(gateTrain.join(drop, Seq("doc_id"), "left_anti"))(
-        (k, md) => k.join(md, Seq("doc_id"), "left_anti"))
-    val nKeep =
-      if (mediaDrop.isDefined) keepFinal.count() else nGateTrain - nDropped
-    val packed = Sampling.assembleKept(s, staged, keepFinal).localCheckpoint(false)
+      // 4m. MEDIA stages (r12, only when the intake ships a
+      // media.parquet): docs carrying an IMAGE payload are caption×
+      // image training pairs, and two more gates apply before packing —
+      //  - the q156 cross-modal admission (caption quality ≥ CapQual ∧
+      //    real-header image with both dims ≥ MinDim) over the REAL
+      //    payload decode, not the ASCII stub class;
+      //  - the q171 image-family canonical keep: phash banding pairs →
+      //    connected families → only the min-id member ships (a crawl's
+      //    re-encoded logo family must not ship N times).
+      // Non-image media (wav/stub-audio) passes through un-gated — the
+      // audio family gate is q157's follow-up, not this stage. Scale
+      // shape: two embarrassingly-parallel decode passes (meta, phash)
+      // + q171's edge-sized machinery; verdicts are doc-id row sets.
+      val mediaDrop = mediaStages(s, in, staged, out, decisions)
 
-    // 6. shards: the shipped rows, content-hash sharded so the split
-    // coordinate and the shard coordinate stay independent (q170's
-    // ShardExpr), carrying the packing layout
-    val stDocs = Tables(s, staged, "documents")
-    val shipped = stDocs
-      .join(packed, "doc_id")
-      .withColumn("shard", expr(Sampling.ShardExpr))
-      .select("shard", "doc_id", "text", "lang", "source",
-        "n_tokens", "bin_id", "bin_offset")
-      .localCheckpoint(false) // 4 consumers: shards, corpus, manifest, stats
-    shipped.write.mode(SaveMode.Overwrite).partitionBy("shard")
-      .parquet(s"$out/shards")
-    shipped.select(col("doc_id"), col("text"), col("lang"), col("source"),
-        length(col("text")).cast("long").as("n_chars"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/corpus/documents.parquet")
+      // 5. mixture admission + packing over the survivors (q75's core
+      // over the ALREADY-CHECKPOINTED gate set minus the drop set — the
+      // composed gate legs must not execute a second time). No count
+      // action here: |packed| == |shipped| (inner join on staged's
+      // unique doc_ids), read off the stats agg below (r9)
+      // no barrier on keepFinal: every leg (gate, drop, media verdicts)
+      // is already checkpointed, so the two consumers (packing,
+      // mixstats) re-run only cheap anti joins (the q31 measured-loss
+      // lesson). The media-present ledger needs the exact keep count;
+      // media-absent keeps r9's no-count profile (|gate| - |dropped|).
+      val keepFinal = mediaDrop
+        .foldLeft(gateTrain.join(drop, Seq("doc_id"), "left_anti"))(
+          (k, md) => k.join(md, Seq("doc_id"), "left_anti"))
+      val nKeep =
+        if (mediaDrop.isDefined) keepFinal.count() else nGateTrain - nDropped
+      val packed = Sampling.assembleKept(s, staged, keepFinal).localCheckpoint(false)
 
-    // 7. manifest over the SHIPPED rows (q170's aggregation), card
-    // over the shipped corpus dir (q79)
-    Sampling.manifestOf(shipped.select(col("shard"), col("n_tokens"),
-        octet_length(col("text")).cast("long").as("n_bytes")))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$out/manifest.parquet")
-    TextOps.q79(s, s"$out/corpus")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$out/card.parquet")
-    // ONE stats action over the checkpointed shipped rows feeds both
-    // ledger lines (MEASURED shard count, not the NShards constant: a
-    // sub-NShards shipment writes fewer content-hash shards)
-    val shTot = shipped.agg(coalesce(sum("n_tokens"), lit(0L)).as("t"),
-      countDistinct("shard").as("sh"), countDistinct("bin_id").as("b"),
-      count(lit(1)).as("n")).collect()(0)
-    val nPacked = shTot.getLong(3)
-    decisions += ((8, "mix_pack", nKeep, nPacked,
-      s"bins=${shTot.getLong(2)}"))
-    decisions += ((9, "shards", nPacked, shTot.getLong(1),
-      s"tokens=${shTot.getLong(0)} of_max_shards=${Sampling.NShards}"))
+      // 6. shards: the shipped rows, content-hash sharded so the split
+      // coordinate and the shard coordinate stay independent (q170's
+      // ShardExpr), carrying the packing layout
+      val stDocs = Tables(s, staged, "documents")
+      val shipped = stDocs
+        .join(packed, "doc_id")
+        .withColumn("shard", expr(Sampling.ShardExpr))
+        .select("shard", "doc_id", "text", "lang", "source",
+          "n_tokens", "bin_id", "bin_offset")
+        .localCheckpoint(false) // 4 consumers: shards, corpus, manifest, stats
+      shipped.write.mode(SaveMode.Overwrite).partitionBy("shard")
+        .parquet(s"$out/shards")
+      shipped.select(col("doc_id"), col("text"), col("lang"), col("source"),
+          length(col("text")).cast("long").as("n_chars"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$out/corpus/documents.parquet")
 
-    // shipped media rides with the shipped docs: the corpus dir is
-    // itself multimodal (q155/q157/q171 probes of the SHIPPED dir see
-    // exactly the admitted, family-deduped payloads)
-    if (hasMedia(s, in))
-      s.read.parquet(Tables.rawPath(in, "media"))
-        .join(shipped.select("doc_id"), "doc_id")
-        .select("doc_id", "payload")
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/corpus/media.parquet")
+      // 7. manifest over the SHIPPED rows (q170's aggregation), card
+      // over the shipped corpus dir (q79)
+      Sampling.manifestOf(shipped.select(col("shard"), col("n_tokens"),
+          octet_length(col("text")).cast("long").as("n_bytes")))
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$out/manifest.parquet")
+      TextOps.q79(s, s"$out/corpus")
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$out/card.parquet")
+      // ONE stats action over the checkpointed shipped rows feeds both
+      // ledger lines (MEASURED shard count, not the NShards constant: a
+      // sub-NShards shipment writes fewer content-hash shards)
+      val shTot = shipped.agg(coalesce(sum("n_tokens"), lit(0L)).as("t"),
+        countDistinct("shard").as("sh"), countDistinct("bin_id").as("b"),
+        count(lit(1)).as("n")).collect()(0)
+      val nPacked = shTot.getLong(3)
+      decisions += ((8, "mix_pack", nKeep, nPacked,
+        s"bins=${shTot.getLong(2)}"))
+      decisions += ((9, "shards", nPacked, shTot.getLong(1),
+        s"tokens=${shTot.getLong(0)} of_max_shards=${Sampling.NShards}"))
 
-    // 8. the dup-index admission base, running concurrently since
-    // the staging step — wait for it here so the ledger rows stay
-    // ordered and the artifact is complete before run() returns
-    idxThread.join()
-    Option(idxErr.get).foreach(t => throw t)
-    decisions += ((10, "dup_index", nStaged, nStaged,
-      f"-> dupindex/ (admission base; overlapped, own_wall=${idxWall.get / 1e9}%.1fs)"))
+      // shipped media rides with the shipped docs: the corpus dir is
+      // itself multimodal (q155/q157/q171 probes of the SHIPPED dir see
+      // exactly the admitted, family-deduped payloads)
+      if (hasMedia(s, in))
+        s.read.parquet(Tables.rawPath(in, "media"))
+          .join(shipped.select("doc_id"), "doc_id")
+          .select("doc_id", "payload")
+          .write.mode(SaveMode.Overwrite).parquet(s"$out/corpus/media.parquet")
 
-    // mixture bookkeeping for [[mixtureGate]]: per-language available
-    // (the final keep set, pre-mixture) and shipped token sums — the
-    // base row the incremental chain's drift gate folds deltas into
-    writeMixStats(s, stDocs.join(keepFinal, "doc_id"),
-      shipped, s"$out/mixstats", batch = None)
+      // 8. the dup-index admission base, running concurrently since
+      // the staging step — wait for it here so the ledger rows stay
+      // ordered and the artifact is complete before run() returns
+      idxThread.join()
+      Option(idxErr.get).foreach(t => throw t)
+      decisions += ((10, "dup_index", nStaged, nStaged,
+        f"-> dupindex/ (admission base; overlapped, own_wall=${idxWall.get / 1e9}%.1fs)"))
 
-    writeLog(s, decisions.rows, out)
+      // mixture bookkeeping for [[mixtureGate]]: per-language available
+      // (the final keep set, pre-mixture) and shipped token sums — the
+      // base row the incremental chain's drift gate folds deltas into
+      writeMixStats(s, stDocs.join(keepFinal, "doc_id"),
+        shipped, s"$out/mixstats", batch = None)
+
+      writeLog(s, decisions.rows, out)
+    } finally { stopIdx(); stopEmb() }
   }
 
   /** Per-language (avail_tokens, shipped_tokens) row set: avail from

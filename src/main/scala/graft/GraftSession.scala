@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's tuned defaults.
@@ -38,6 +39,32 @@ object GraftSession {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** The developer mains' session: [[local]] at `$SPARK_GRAFT_CPUS`
+    * threads (default: every core). With `$SPARK_GRAFT_STAGE_MIN=<secs>`
+    * set — else at `stageMin`, if given — every stage slower than the
+    * floor prints one `[stage]` line (id, task count, wall, name),
+    * streaming foreachBatch stages included. */
+  def fromEnv(stageMin: Option[Double] = None): SparkSession = {
+    val s = local(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors))
+    sys.env.get("SPARK_GRAFT_STAGE_MIN").map(_.toDouble).orElse(stageMin)
+      .foreach(floor => s.sparkContext.addSparkListener(new SparkListener {
+        override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+          val si = sc.stageInfo
+          // either Option can be None (stage failed before submission
+          // / resubmitted) — a get would throw inside the listener and
+          // silently drop the profile row
+          for (sub <- si.submissionTime; end <- si.completionTime) {
+            val dur = (end - sub) / 1000.0
+            if (dur > floor)
+              println(f"[stage] id=${si.stageId} tasks=${si.numTasks} time=$dur%.2fs " +
+                si.name.takeWhile(_ != '\n').take(80))
+          }
+        }
+      }))
     s
   }
 }

@@ -336,10 +336,13 @@ object Events {
     val counts = anchored.groupBy("user_id")
       .agg(max(when(col("event_type") === "view", 1L)).as("hv"),
         max("c_ts").as("c"), max("p_ts").as("p"))
+      // coalesce: with no identified user at all (an all-anonymous
+      // corpus) the global agg sees zero groups and sum() is NULL —
+      // the oracle's count(*) reads 0 there
       .agg(
-        sum(when(col("hv").isNotNull, 1L).otherwise(0L)).as("nv0"),
-        sum(when(col("c").isNotNull, 1L).otherwise(0L)).as("nc"),
-        sum(when(col("p").isNotNull, 1L).otherwise(0L)).as("np"))
+        coalesce(sum(when(col("hv").isNotNull, 1L).otherwise(0L)), lit(0L)).as("nv0"),
+        coalesce(sum(when(col("c").isNotNull, 1L).otherwise(0L)), lit(0L)).as("nc"),
+        coalesce(sum(when(col("p").isNotNull, 1L).otherwise(0L)), lit(0L)).as("np"))
     // the NULL-user stage-1 branch: an EXISTENCE probe, never a
     // window partition. limit(1) short-circuits the scan at the
     // first NULL-user view row (the x30 A/B read 0.6 s for a full

@@ -268,8 +268,8 @@ object AnnIndex {
   /** The ONE recall@k computation (serving nprobe vs exact = all
     * cells, same scorer) — shared by [[recallGate]] (micro hits /
     * denom for the integer-ppm gate) and the drift harness's
-    * macro-averaged report ([[graft.DriftBench.recallOf]] delegates
-    * here), so the two recall definitions cannot drift apart.
+    * macro-averaged report (the `drift` scenario in
+    * [[graft.Scenarios]]), so the two recall definitions cannot drift apart.
     * Returns (hits, denom, macroMean); every probe returns exactly
     * k rows per query, so micro == macro whenever no query's exact
     * set is empty. */

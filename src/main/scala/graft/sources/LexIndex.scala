@@ -371,7 +371,7 @@ object LexIndex {
     * jobs. Engage when saved ≥ [[PruneMinSaved]] AND saved ≥
     * [[PruneSavedFactor]]·essential.
     *
-    * r11 RE-MEASURE (LexBench A/B, 20-query triggers, local[32],
+    * r11 RE-MEASURE (lex-scenario A/B, 20-query triggers, local[32],
     * regenerated zipf corpora, seed-refined θ̂ making the split
     * maximally favorable to pruning): pruned-on LOSES at every
     * tested scale — 3.7 vs 3.1 (x10), 6.3 vs 3.4 (x30), 5.5 vs 3.9
@@ -433,13 +433,9 @@ object LexIndex {
   private[graft] def probePruned(s: SparkSession, path: String, stats: LexStats,
       q: DataFrame, pairs: Seq[(Long, String)], tbOf: Map[String, Long],
       toks: Option[Seq[String]], tbs: Seq[Long], k: Int): Option[DataFrame] = {
-    // A/B hook: SPARK_GRAFT_LEX_PRUNE=off measures the unpruned plan
-    // on the same corpus/index (the LexBench comparison column);
-    // =on drops the volume gate (the parity spec's small corpora).
-    // System property first — env vars can't be set per-test in-JVM.
-    val mode = sys.props.getOrElse("graft.lex.prune",
-      sys.env.getOrElse("SPARK_GRAFT_LEX_PRUNE", "auto"))
-    if (mode == "off") return None
+    // graft.lex.prune=on drops the volume gate (the parity spec's
+    // small corpora sit below it)
+    val forced = sys.props.get("graft.lex.prune").contains("on")
     if (toks.isEmpty || k < 1 || k > TopImpsN) return None
     if (!buildStats(s, path).contains(stats)) return None
     val summRows = s.read.schema(summSchema).parquet(summaryP(path))
@@ -459,7 +455,7 @@ object LexIndex {
     val savedVol = pairs.iterator.collect {
       case p @ (_, t) if dfOf.contains(t) && !essSet(p) => dfOf(t) }.sum
     if (savedVol == 0L) return None // nothing prunable
-    if (mode != "on" &&
+    if (!forced &&
       (savedVol < PruneMinSaved || savedVol < PruneSavedFactor * essVol)) return None
     if (essVol > CandMax) return None
     import s.implicits._

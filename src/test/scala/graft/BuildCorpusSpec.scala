@@ -1,6 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 /** The composed corpus-build job's contract: every artifact it ships
@@ -162,16 +169,70 @@ class BuildCorpusSpec extends AnyFunSuite {
       val shallow = joined(BuildCorpus.dupIdSide(spark, in, raw))
       val deepBc = joined(BuildCorpus.dupIdSide(spark, in, raw, maxBcast = 20L))
       val fallback = joined(BuildCorpus.dupIdSide(spark, in, raw, maxBcast = 3L))
-      assert(shallow.queryExecution.analyzed.toString.contains("broadcast"),
-        "healthy intake lost its broadcast hint")
-      assert(deepBc.queryExecution.analyzed.toString.contains("broadcast"),
+      // plan nodes, not plan text: the hint the gate sets, and the
+      // join strategy the planner picked from it
+      def hinted(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.exists {
+        case h: ResolvedHint => h.hints.strategy.contains(BROADCAST)
+        case _ => false
+      }
+      def bhj(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.exists {
+        case _: BroadcastHashJoinExec => true
+        case a: AdaptiveSparkPlanExec => a.initialPlan.exists(_.isInstanceOf[BroadcastHashJoinExec])
+        case _ => false
+      }
+      assert(hinted(shallow) && bhj(shallow), "healthy intake lost its broadcast hint")
+      assert(hinted(deepBc) && bhj(deepBc),
         "small dup set past the raw-count gate lost its broadcast hint")
-      assert(!fallback.queryExecution.analyzed.toString.contains("broadcast"),
-        "adversarial dup set still carries a broadcast hint")
+      assert(!hinted(fallback), "adversarial dup set still carries a broadcast hint")
       this.eq(shallow, fallback, "dup verdicts across join strategies")
       this.eq(shallow, deepBc, "dup verdicts across gate branches")
       assert(shallow.filter(col("is_dup")).select("doc_id").distinct().count() == 10L,
         "planted dup ids not all flagged")
+    }
+  }
+
+  test("a stage that throws mid-build cancels and joins the overlap threads before propagating") {
+    withTmpDir("buildcorpus-fail") { root =>
+      val in = s"$root/in"
+      GenData.generate(spark, in, 400, 100)
+      // a media table without its payload column: the media stage
+      // fails analysis on the main thread, after both side threads start
+      spark.range(10).toDF("doc_id").write.parquet(s"$in/media.parquet")
+      val err = intercept[org.apache.spark.sql.AnalysisException](
+        BuildCorpus.run(spark, in, s"$root/out"))
+      assert(err.getMessage.contains("payload"), err.getMessage)
+      val sides = Set("graft-dupindex", "graft-embaudit")
+      val alive = Thread.getAllStackTraces.keySet.asScala
+        .filter(t => t.isAlive && sides(t.getName))
+      assert(alive.isEmpty, s"side threads still running: ${alive.map(_.getName)}")
+      // the status tracker is fed by the async listener bus
+      eventually(timeout(10.seconds), interval(50.millis)) {
+        assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+          "a side thread's jobs outlived run()")
+      }
+    }
+  }
+
+  test("side-thread stop cancels the thread's running job and joins it") {
+    import spark.implicits._
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val (t, stop) = BuildCorpus.sideThread(spark, "graft-sidetest") {
+      started.countDown()
+      // ~10 s per task unless cancelled; a killed task stops at its
+      // next row
+      try spark.range(0, 400, 1, 4).map { i => Thread.sleep(100); i }.count()
+      catch { case _: Exception => () }
+    }
+    started.await()
+    eventually(timeout(10.seconds), interval(20.millis)) {
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.nonEmpty)
+    }
+    val t0 = System.nanoTime
+    stop()
+    assert(!t.isAlive)
+    assert((System.nanoTime - t0) / 1e9 < 5.0, "stop waited for the job instead of cancelling it")
+    eventually(timeout(10.seconds), interval(50.millis)) {
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
     }
   }
 

@@ -91,6 +91,19 @@ class EventsSpec extends AnyFunSuite {
     assert(m("1_view") >= m("2_click") && m("2_click") >= m("3_purchase"))
   }
 
+  test("q24 on an all-anonymous corpus counts the NULL user's view group once, no NULL stages") {
+    TestSpark.withTmpDir("q24anon") { dir =>
+      Tables(spark, sf, "events").withColumn("user_id", lit(null).cast("long"))
+        .write.parquet(s"$dir/events.parquet")
+      val m = operators.Events.q24(spark, dir).collect()
+        .map(r => r.getString(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+      // the oracle's GROUP BY keeps one NULL-user group when a view row
+      // exists; its click/purchase CTEs join on user_id and match nothing
+      assert(m == Map("1_view" -> Some(1L), "2_click" -> Some(0L), "3_purchase" -> Some(0L)),
+        s"all-anonymous funnel: $m")
+    }
+  }
+
   test("q25 cohort week 0 contains every user exactly once") {
     val ev = Tables(spark, sf, "events")
     val users = ev.select("user_id").distinct().count()

@@ -155,64 +155,61 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.table("wau_update_out").count() > 0)
   }
 
+  /** Drain `df` through the noop sink; every trigger counted. */
+  private def drainNoop(df: org.apache.spark.sql.DataFrame, mode: String) =
+    Scenarios.drive(spark)(df.writeStream.format("noop").outputMode(mode).start())
+
   test("x10 stress replay: stateful stream state sits at its documented bound, not history") {
     assume(new java.io.File("/tmp/estress_x10/events.parquet").isDirectory,
       "x10 events stress corpus not present on this machine")
     import streaming.EnrichStream
     val chunks = 8
-    val spool = StreamBench.spoolEvents(spark, "/tmp/estress_x10", chunks)
-    val total = spark.read.schema(EnrichStream.rawSchema).parquet(spool).count()
-    val ltvUsers = EnrichStream.typed(Tables(spark, "/tmp/estress_x10", "events"))
-      .filter(e => e.event_type.contains("purchase") ||
-        e.event_type.contains("return") || e.is_return)
-      .map(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
-      .distinct().count()
-    def replay() = EnrichStream.replaySource(spark, spool, 1)
+    TestSpark.withTmpDir("x10replay") { root =>
+      val spool = Scenarios.spoolEvents(spark, "/tmp/estress_x10", chunks, root)
+      val total = spark.read.schema(EnrichStream.rawSchema).parquet(spool).count()
+      val ltvUsers = EnrichStream.typed(Tables(spark, "/tmp/estress_x10", "events"))
+        .filter(e => e.event_type.contains("purchase") ||
+          e.event_type.contains("return") || e.is_return)
+        .map(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
+        .distinct().count()
+      def replay() = EnrichStream.replaySource(spark, spool, 1)
 
-    val ltv = StreamBench.measure("ltv",
-      EnrichStream.ltvStateful(EnrichStream.typed(replay()))
-        .writeStream.format("noop").outputMode("append").start(), ltvUsers, "")
-    // nothing dropped as late under time-ordered replay, and state is
-    // EXACTLY one row per purchase/return user — not per event
-    assert(ltv.rows == total, s"ltv admitted ${ltv.rows} of $total rows")
-    assert(ltv.maxStateRows == ltvUsers,
-      s"ltv state ${ltv.maxStateRows} != $ltvUsers purchase/return users")
+      val ltv = drainNoop(EnrichStream.ltvStateful(EnrichStream.typed(replay())).toDF(), "append")
+      // nothing dropped as late under time-ordered replay, and state is
+      // EXACTLY one row per purchase/return user — not per event
+      assert(ltv.rows == total, s"ltv admitted ${ltv.rows} of $total rows")
+      assert(ltv.maxStateRows == ltvUsers,
+        s"ltv state ${ltv.maxStateRows} != $ltvUsers purchase/return users")
 
-    val sess = StreamBench.measure("sessions",
-      EnrichStream.sessionizedStream(replay().filter(col("user_id").isNotNull))
-        .writeStream.format("noop").outputMode("append").start(),
-      0L, "")
-    // open sessions bounded by events within the ~2-batch watermark
-    // horizon (rate x horizon), never by the 1M-event history
-    assert(sess.rows == total)
-    assert(sess.maxStateRows <= 2L * (total / chunks + 1L),
-      s"session state ${sess.maxStateRows} exceeds the rate x horizon bound")
-    assert(sess.maxStateRows < total / 4,
-      "session state tracks history, not the open horizon")
+      val sess = drainNoop(
+        EnrichStream.sessionizedStream(replay().filter(col("user_id").isNotNull)), "append")
+      // open sessions bounded by events within the ~2-batch watermark
+      // horizon (rate x horizon), never by the 1M-event history
+      assert(sess.rows == total)
+      assert(sess.maxStateRows <= Scenarios.openSessionBound(total, chunks),
+        s"session state ${sess.maxStateRows} exceeds the rate x horizon bound")
+      assert(sess.maxStateRows < total / 4,
+        "session state tracks history, not the open horizon")
 
-    val roll = StreamBench.measure("rolling",
-      EnrichStream.rollingActiveStream(replay())
-        .writeStream.format("noop").outputMode("update").start(), 0L, "")
-    val bound = 8L + 2L * StreamBench.chunkSpanDays(spark, spool, chunks)
-    assert(roll.maxStateRows > 0 && roll.maxStateRows <= bound,
-      s"rolling-active state ${roll.maxStateRows} outside (0, $bound]")
+      val roll = drainNoop(EnrichStream.rollingActiveStream(replay()), "update")
+      val bound = Scenarios.rollingBound(spark, spool, chunks)
+      assert(roll.maxStateRows > 0 && roll.maxStateRows <= bound,
+        s"rolling-active state ${roll.maxStateRows} outside (0, $bound]")
 
-    // the r9 emission-mode additions: per-closed-session append with
-    // collected-struct state (same open-session row bound as
-    // sessions), and complete-mode republication with the structural
-    // #types x 168 cell cap — flat no matter the stream length
-    val paths = StreamBench.measure("session_paths",
-      EnrichStream.sessionPathStream(replay().filter(col("user_id").isNotNull))
-        .writeStream.format("noop").outputMode("append").start(), 0L, "")
-    assert(paths.rows == total)
-    assert(paths.maxStateRows <= 2L * (total / chunks + 1L),
-      s"session-path state ${paths.maxStateRows} exceeds the rate x horizon bound")
-    val season = StreamBench.measure("season",
-      EnrichStream.seasonStream(replay())
-        .writeStream.format("noop").outputMode("complete").start(), 0L, "")
-    assert(season.rows == total)
-    assert(season.maxStateRows > 0 && season.maxStateRows <= 5L * 168L,
-      s"season state ${season.maxStateRows} exceeds the #types x 168 structural cap")
+      // the r9 emission-mode additions: per-closed-session append with
+      // collected-struct state (same open-session row bound as
+      // sessions), and complete-mode republication with the structural
+      // #types x 168 cell cap — flat no matter the stream length
+      val paths = drainNoop(
+        EnrichStream.sessionPathStream(replay().filter(col("user_id").isNotNull)), "append")
+      assert(paths.rows == total)
+      assert(paths.maxStateRows <= Scenarios.openSessionBound(total, chunks),
+        s"session-path state ${paths.maxStateRows} exceeds the rate x horizon bound")
+      val season = drainNoop(EnrichStream.seasonStream(replay()), "complete")
+      assert(season.rows == total)
+      assert(season.maxStateRows > 0 && season.maxStateRows <= 5L * 168L,
+        s"season state ${season.maxStateRows} exceeds the #types x 168 structural cap")
+    }
   }
 
   test("x30 stress replay: session state tracks RATE, not history (the x10 law at 3x the rate)") {
@@ -220,21 +217,21 @@ class StreamingSpec extends AnyFunSuite {
       "x30 events stress corpus not present on this machine")
     import streaming.EnrichStream
     val chunks = 8
-    val spool = StreamBench.spoolEvents(spark, "/tmp/estress_x30", chunks)
-    val total = spark.read.schema(EnrichStream.rawSchema).parquet(spool).count()
-    val sess = StreamBench.measure("sessions",
-      EnrichStream.sessionizedStream(
-          EnrichStream.replaySource(spark, spool, 1).filter(col("user_id").isNotNull))
-        .writeStream.format("noop").outputMode("append").start(), 0L, "")
-    assert(sess.rows == total)
-    // same law as x10: open sessions <= events in ~2 replay chunks.
-    // 3x the event rate, same horizon -> state scales WITH the chunk
-    // (measured 377k vs 119k at x10, ratio to chunk ~1.0 both), never
-    // with the 3M-event history
-    assert(sess.maxStateRows <= 2L * (total / chunks + 1L),
-      s"x30 session state ${sess.maxStateRows} exceeds the rate x horizon bound")
-    assert(sess.maxStateRows < total / 4,
-      "x30 session state tracks history, not the open horizon")
+    TestSpark.withTmpDir("x30replay") { root =>
+      val spool = Scenarios.spoolEvents(spark, "/tmp/estress_x30", chunks, root)
+      val total = spark.read.schema(EnrichStream.rawSchema).parquet(spool).count()
+      val sess = drainNoop(EnrichStream.sessionizedStream(
+        EnrichStream.replaySource(spark, spool, 1).filter(col("user_id").isNotNull)), "append")
+      assert(sess.rows == total)
+      // same law as x10: open sessions <= events in ~2 replay chunks.
+      // 3x the event rate, same horizon -> state scales WITH the chunk
+      // (measured 377k vs 119k at x10, ratio to chunk ~1.0 both), never
+      // with the 3M-event history
+      assert(sess.maxStateRows <= Scenarios.openSessionBound(total, chunks),
+        s"x30 session state ${sess.maxStateRows} exceeds the rate x horizon bound")
+      assert(sess.maxStateRows < total / 4,
+        "x30 session state tracks history, not the open horizon")
+    }
   }
 
   test("streaming anomaly hours match a prefix-stats recomputation exactly") {
